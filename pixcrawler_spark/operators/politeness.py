@@ -15,8 +15,10 @@ queue realized as window-ranked batches. Robots-denied urls never
 consume budget; they are decided (and recorded) without fetching.
 
 Skew: the window partitions by registrable domain; Zipf-skewed hosts
-produce hot partitions, which is why the round pre-repartitions by a
-salted domain key (plans/crawl.py) and AQE skew handling stays on.
+produce hot partitions. The crawl round (plans/crawl.py) conjoins a
+literal global capacity bound with the per-domain capacity, so Spark's
+WindowGroupLimit cuts each domain to its top-K map-side, before the
+exchange.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ PATH_RE = r"^[a-z]+://[^/]+/(.*)$"
 
 
 def domain_expr(url_col: str = "url"):
-    """Politeness / salting key: the PSL *registrable domain* (eTLD+1),
+    """Politeness key: the PSL *registrable domain* (eTLD+1),
     not the raw host — ``www.example.co.uk`` and ``shop.example.co.uk``
     share one budget; ``a.blogspot.com`` and ``b.blogspot.com`` (private
     public suffix) do not. Pure JVM expressions; see operators/psl.py.

@@ -60,11 +60,11 @@ A round is then:
    metrics + the logical-count telemetry. NO full-frontier write, NO
    full-frontier shuffle — only scans (which parallelize) and
    delta-sized writes.
-3. COMPACT (every ``compact_every`` rounds, idempotent): base :=
-   materialized logical; tombstones/added truncate. A crash anywhere
-   inside compaction leaves the logical view unchanged (merging an
-   already-compacted base with stale deltas is a no-op by
-   construction).
+3. COMPACT (once accumulated tombstones reach ``compact_ratio`` of the
+   base, idempotent): base := materialized logical; tombstones/added
+   truncate. A crash anywhere inside compaction leaves the logical
+   view unchanged (merging an already-compacted base with stale deltas
+   is a no-op by construction).
 
 SCALE NOTES (10^10-URL frontier):
 - **No wide shuffle of any static table.** ``seen``, ``pages_ext``
@@ -78,9 +78,9 @@ SCALE NOTES (10^10-URL frontier):
   Spark's WindowGroupLimit rule run a map-side partial top-K per
   domain BEFORE the exchange — the hottest domain contributes at most
   K rows per map task to the shuffle instead of its full row count.
-  (``bench/profile_round.py`` measured the unsalted window serializing
-  18% of the corpus into one task without this.) The salted two-phase
-  variant (``salt_buckets > 1``) covers unbounded-capacity scenarios.
+  (``bench/profile_round.py`` measured the plain window serializing
+  18% of the corpus into one task without this.) Capacity is always
+  bounded by ``max_per_round``, so the literal bound covers every input.
 - The discovery seen-probe can be bloom-accelerated (operators/
   seen.py) when ``use_bloom`` — an INCREMENTAL persistent bitmap
   (delta-only updates per round, staleness-safe rebuild); false drops
@@ -95,17 +95,14 @@ SCALE NOTES (10^10-URL frontier):
   states: the frontier not yet advanced (roll back any partial
   results/seen commits and re-run the deterministic decide plan), or
   the frontier advanced (results/seen are complete by construction;
-  only metrics needs finalizing from the committed log). See
-  ``_recover``.
+  only metrics needs finalizing from the committed log and the counts
+  stamped into the frontier commit). See ``_recover``.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
-
-_TRACE = os.environ.get("PIXCRAWLER_TRACE", "") == "1"
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
@@ -132,10 +129,11 @@ def _best_order():
     ]
 
 
-@dataclass
+@dataclass(slots=True)
 class CrawlConfig:
     """The crawl "query" (reference CONFIG_SCHEMA, builder/_config.py:31-94,
-    plus the frontier extensions from FIXTURES.md §3)."""
+    plus the frontier extensions from FIXTURES.md §3). Slotted: setting
+    an attribute that is not a field raises."""
 
     seeds: list[str]
     max_depth: int = 3
@@ -143,8 +141,6 @@ class CrawlConfig:
     round_len_s: float = 10.0
     engines: tuple[str, ...] = ("google", "bing", "baidu")
     use_bloom: bool = False
-    salt_buckets: int = 1
-    seed: int = 42
     # Per-round HLL registers of decided urls per fetch decision
     # (operators/sketches.py, fast xxhash64 path), committed next to
     # the metrics row. OFF by default: the golden/oracle surface is
@@ -163,12 +159,6 @@ class CrawlConfig:
     # engines[(depth + retry_count) % n], instead of being recorded;
     # only the exhausted attempt lands in results/seen. 0 = no retries.
     max_retries: int = 0
-    # Materialize extraction ONCE into a compact pages_ext table
-    # (url, warc_ts, text, outlinks) instead of re-running the Arrow
-    # UDF on raw html every round. Extraction is deterministic per
-    # page; this is the standard WARC→columnar prep step, and it keeps
-    # the steady-state round loop pure JVM.
-    precompute_extraction: bool = True
     # url-hash bucket count for the seen/pages_ext/frontier tables
     # (Iceberg bucket(N, url) in production). Set ≈ total cores.
     n_buckets: int = 32
@@ -180,10 +170,8 @@ class CrawlConfig:
     # quantity that actually degrades reads (tombstone anti-join
     # traffic scales with |removed|, not with wall-clock rounds).
     # Counters chain through commit metadata, so the policy costs no
-    # extra Spark jobs. ``compact_every`` remains as an optional
-    # periodic override (0 = off); ratio 0 disables the ratio trigger.
+    # extra Spark jobs. 0 disables compaction.
     compact_ratio: float = 0.25
-    compact_every: int = 0
     # Resolve redirect aliases to their chain-terminal url BEFORE any
     # url enters the frontier (seeds and discovered outlinks), so the
     # seen set and politeness budgets are charged to the page actually
@@ -213,6 +201,13 @@ class CrawlConfig:
         unknown = [e for e in self.engines if e not in ENGINE_SCORES]
         if unknown:
             raise ValueError(f"unknown engines: {unknown}")
+        # round_len_s = 0 gives every crawl-delayed domain capacity 0
+        # (the crawl stalls silently); n_buckets = 0 fails only inside
+        # the first bucketed write
+        if self.round_len_s <= 0 or self.n_buckets < 1:
+            raise ValueError("round_len_s > 0 and n_buckets >= 1 required")
+        if self.compact_ratio < 0 or self.max_retries < 0:
+            raise ValueError("compact_ratio >= 0 and max_retries >= 0 required")
 
 
 def _engine_expr(depth_col, engines: tuple[str, ...]):
@@ -343,31 +338,25 @@ class CrawlEngine:
             self.spark.createDataFrame([(u,) for u in self.config.seeds], "url string")
         )
 
-    def extracted_pages(self) -> DataFrame:
-        """Pages with text/outlinks extracted (Arrow-batched UDF) and
-        html dropped: (url, warc_ts, text, outlinks, html_absent)."""
-        ext = map_in_pandas_extract(self.pages.select("url", "warc_ts", "html"))
-        return ext.select(
-            "url",
-            "warc_ts",
-            F.col("extracted_text").alias("text"),
-            "outlinks",
-            F.col("html").isNull().alias("html_absent"),
-        )
-
     def ensure_pages_ext(self) -> DataFrame:
-        """Materialize the one-time extraction table, bucketed by url so
-        every later fetch/expansion join scans it exchange-free
-        (idempotent)."""
+        """Materialize the one-time extraction table (url, warc_ts,
+        text, outlinks, html_absent): the Arrow-batched UDF runs once
+        per corpus, never per round. Bucketed by url so every later
+        fetch/expansion join scans it exchange-free (idempotent)."""
         if not self.static_store.exists("pages_ext"):
-            self.static_store.overwrite(
-                "pages_ext", self.extracted_pages(), bucket=self._bucket
+            ext = map_in_pandas_extract(
+                self.pages.select("url", "warc_ts", "html")
+            ).select(
+                "url",
+                "warc_ts",
+                F.col("extracted_text").alias("text"),
+                "outlinks",
+                F.col("html").isNull().alias("html_absent"),
             )
+            self.static_store.overwrite("pages_ext", ext, bucket=self._bucket)
         return self.static_store.read("pages_ext")
 
     # -- merge-on-read frontier view ------------------------------------------
-    FRONTIER_TABLES = ("frontier", "frontier_added", "frontier_removed")
-
     def logical_frontier(self, as_of_round: int | None = None) -> DataFrame:
         """The live frontier: merge_best(base ANTI removed, added).
 
@@ -444,47 +433,23 @@ class CrawlEngine:
         allowed = ruled.where(~F.col("robots_denied"))
 
         # priority admission: exact per-domain top-capacity
-        if cfg.salt_buckets > 1:
-            # two-phase salted top-k (unbounded-capacity safe): phase 1
-            # cuts each (domain, salt) shard to capacity — at most
-            # salt*capacity rows per domain reach the exact re-rank
-            salt = F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets))
-            w1 = Window.partitionBy("domain", salt.alias("_salt")).orderBy(
-                F.asc("depth"), F.desc("score"), F.asc("url")
+        w = Window.partitionBy("domain").orderBy(
+            F.asc("depth"), F.desc("score"), F.asc("url")
+        )
+        bound = self._capacity_bound()
+        admitted = (
+            allowed.withColumn("_rank", F.row_number().over(w))
+            .where(
+                (F.col("_rank") <= F.lit(bound))  # literal → WindowGroupLimit
+                & (F.col("_rank") <= pol.capacity_expr(cfg.round_len_s))
             )
-            survivors = (
-                allowed.withColumn("_prern", F.row_number().over(w1))
-                .where(F.col("_prern") <= pol.capacity_expr(cfg.round_len_s))
-                .drop("_prern")
-            )
-            admitted = (
-                pol.admit(survivors, cfg.round_len_s)
-                .where(F.col("admitted"))
-                .drop("priority_rank", "admitted")
-            )
-        else:
-            w = Window.partitionBy("domain").orderBy(
-                F.asc("depth"), F.desc("score"), F.asc("url")
-            )
-            bound = self._capacity_bound()
-            admitted = (
-                allowed.withColumn("_rank", F.row_number().over(w))
-                .where(
-                    (F.col("_rank") <= F.lit(bound))  # literal → WindowGroupLimit
-                    & (F.col("_rank") <= pol.capacity_expr(cfg.round_len_s))
-                )
-                .drop("_rank")
-            )
+            .drop("_rank")
+        )
 
         # fetch = join admitted against the bucketed pages table on url
         # (only the admitted delta shuffles); decision CASE replaces
         # classify_http_error (builder/_exceptions.py:216-240)
-        pext = (
-            self.ensure_pages_ext()
-            if cfg.precompute_extraction
-            else self.extracted_pages()
-        )
-        pages = pext.select(
+        pages = self.ensure_pages_ext().select(
             "url", "warc_ts", "html_absent", F.lit(True).alias("_page_exists")
         )
         fetched = admitted.join(pages, "url", "left")
@@ -527,20 +492,6 @@ class CrawlEngine:
         )
         return decided_log.unionByName(denied_log)
 
-    def plan_round(self, round_no: int) -> dict:
-        """Compatibility view over decide_plan: {'results': recorded
-        decisions, 'retry': re-enqueued frontier rows, 'frontier': the
-        input frontier}."""
-        log = self.decide_plan(round_no)
-        return {
-            "results": log.where(~F.col("will_retry")).select(
-                "url", "domain", "warc_ts", "fetch_decision", "depth",
-                "discovered_round", "round", "partition_id",
-            ),
-            "retry": self._retry_frontier(log, round_no),
-            "frontier": self.logical_frontier(round_no),
-        }
-
     def _retry_frontier(self, log: DataFrame, round_no: int) -> DataFrame:
         cfg = self.config
         next_retry = F.col("retry_count") + 1
@@ -568,11 +519,7 @@ class CrawlEngine:
             & (F.col("depth") < cfg.max_depth)
             & (~F.col("will_retry"))
         ).select("url", "depth")
-        links = (
-            self.ensure_pages_ext()
-            if cfg.precompute_extraction
-            else self.extracted_pages()
-        ).select("url", "outlinks")
+        links = self.ensure_pages_ext().select("url", "outlinks")
         next_depth = (F.col("depth") + 1).cast("int")
         # merge hint: the fetched set grows with the politeness budget —
         # a driver-built broadcast would serialize with round size; SMJ
@@ -661,8 +608,7 @@ class CrawlEngine:
 
     def _delta_expr(self, log: DataFrame, round_no: int) -> DataFrame:
         """Raw (pre-dedup) frontier delta of a round: discovered
-        outlinks ∪ retry re-enqueues. Deterministic given the committed
-        log, so recovery can recompute it."""
+        outlinks ∪ retry re-enqueues."""
         return self._discovered_frontier(log, round_no).unionByName(
             self._retry_frontier(log, round_no).drop(
                 "robots_denied", "crawl_delay_s", "max_per_round"
@@ -694,27 +640,37 @@ class CrawlEngine:
         fmeta = self._frontier_commit_meta()
         if int(fmeta.get("round", -1)) >= round_no:
             return self._finalize_metrics(round_no)
-        self.store.drop_tagged("results", {f"round-{round_no}"})
-        self.store.drop_tagged("metrics", {f"round-{round_no}"})
-        if self.store.exists("sketch_registers"):
-            self.store.drop_tagged("sketch_registers", {f"round-{round_no}"})
-        if self.store.exists("seen"):
-            mx = self.store.column_max("seen", "completed_round")
-            if mx is not None and int(mx) >= round_no:
-                clean = self.store.read("seen", SEEN_SCHEMA).where(
-                    F.col("completed_round") < round_no
-                )
-                self.store.overwrite("seen", clean, bucket=self._bucket)
-        if self.store.exists("frontier_removed"):
-            mx = self.store.column_max("frontier_removed", "round")
-            if mx is not None and int(mx) >= round_no:
-                clean = self.store.read(
-                    "frontier_removed", REMOVED_SCHEMA
-                ).where(F.col("round") < round_no)
-                self.store.overwrite(
-                    "frontier_removed", clean, bucket=self._bucket
-                )
+        self._rollback(round_no, round_no)
+        self._truncate_from(
+            "frontier_removed", "round", REMOVED_SCHEMA, round_no
+        )
         return None
+
+    def _rollback(self, from_round: int, to_round: int) -> None:
+        """Undo rounds from_round..to_round in the round-scoped tables:
+        drop their tagged results/metrics/sketch snapshots, then cut
+        ``seen`` back to completed_round < from_round."""
+        tags = {f"round-{r}" for r in range(from_round, to_round + 1)}
+        self.store.drop_tagged("results", tags)
+        self.store.drop_tagged("metrics", tags)
+        if self.store.exists("sketch_registers"):
+            self.store.drop_tagged("sketch_registers", tags)
+        self._truncate_from("seen", "completed_round", SEEN_SCHEMA, from_round)
+
+    def _truncate_from(
+        self, table: str, col: str, schema, from_round: int
+    ) -> None:
+        """Filter-rewrite a bucketed table to ``col < from_round``, only
+        when its parquet footer stats (driver-side, no scan) show a row
+        at or past from_round."""
+        if not self.store.exists(table):
+            return
+        mx = self.store.column_max(table, col)
+        if mx is not None and int(mx) >= from_round:
+            clean = self.store.read(table, schema).where(
+                F.col(col) < from_round
+            )
+            self.store.overwrite(table, clean, bucket=self._bucket)
 
     def _frontier_commit_meta(self) -> dict:
         """The round's commit point is the ``frontier_added`` flip
@@ -728,42 +684,23 @@ class CrawlEngine:
 
     def _finalize_metrics(self, round_no: int) -> dict:
         """Round N crashed after its frontier commit point: results,
-        seen and tombstones are complete by the commit order; recompute
-        the metrics row from the committed round_log. The input
-        frontier size was stamped into the added-table commit meta.
-        Wall-clock of the crashed attempt is unrecoverable → 0."""
+        seen and tombstones are complete by the commit order. The
+        per-partition counts come from the committed round_log; the
+        input frontier size and the discovery counts were stamped into
+        the added-table commit meta. Wall-clock of the crashed attempt
+        is unrecoverable → 0."""
         lmeta = self.store.table_meta("round_log")
         if int(lmeta.get("round", -1)) != round_no:
             raise RuntimeError(
                 f"recovery invariant violated: frontier advanced to round "
                 f"{round_no} but round_log meta says {lmeta.get('round')}"
             )
-        n_frontier = int(
-            self.store.table_meta("frontier_added").get("n_frontier", 0)
-        )
+        ameta = self.store.table_meta("frontier_added")
         log = self.store.read("round_log")
-        per_part = self._metrics_agg(log)
-        n_disc_raw = int(self._delta_expr(log, round_no).count())
-        n_disc_new = self._count_disc_new(log, round_no)
         return self._commit_metrics(
-            round_no, per_part, n_frontier, n_disc_raw, n_disc_new,
+            round_no, self._metrics_agg(log), int(ameta["n_frontier"]),
+            int(ameta["n_discovered_raw"]), int(ameta["n_discovered_new"]),
             wall=0.0, log=log,
-        )
-
-    def _count_disc_new(self, log: DataFrame, round_no: int) -> int:
-        """Discovery-dedup telemetry: rows of the round's deduped,
-        seen-filtered delta whose url was NOT already awaiting in the
-        frontier (same quantity the v2 design derived from footer
-        counts; computed directly now that nothing rewrites the whole
-        frontier)."""
-        delta_new = self._delta_new(log, round_no)
-        remainder_urls = self.logical_frontier(round_no).select("url").join(
-            log.select("url").hint("merge"), "url", "left_anti"
-        )
-        return int(
-            delta_new.join(
-                remainder_urls.hint("merge"), "url", "left_anti"
-            ).count()
         )
 
     @staticmethod
@@ -794,16 +731,6 @@ class CrawlEngine:
     def run_round(self, round_no: int) -> dict:
         cfg = self.config
         t0 = time.monotonic()
-        _last = [t0]
-
-        def _trace(label: str) -> None:
-            if _TRACE:
-                now = time.monotonic()
-                print(
-                    f"  [round {round_no}] {label}: +{now - _last[0]:.2f}s",
-                    flush=True,
-                )
-                _last[0] = now
 
         # crash recovery (no-op on a clean run; see _recover)
         recovered = self._recover(round_no)
@@ -818,7 +745,6 @@ class CrawlEngine:
             meta={"round": round_no},
         )
         log = self.store.read("round_log")
-        _trace("decide (round_log commit)")
 
         # 2-3. MAINTAIN — independent scans of the committed log,
         # submitted as CONCURRENT Spark jobs (threads share the
@@ -889,9 +815,7 @@ class CrawlEngine:
             .persist()
         )
         delta_new = self._delta_new(
-            log, round_no, seen_prev=seen_prev,
-            use_bloom=cfg.use_bloom, prebuilt=bloom_prebuilt,
-            delta_ranked=delta_ranked,
+            log, delta_ranked, seen_prev, prebuilt=bloom_prebuilt
         )
 
         # input logical-frontier size: chained arithmetically through
@@ -982,20 +906,21 @@ class CrawlEngine:
         n_decided_tmp = sum(r["n_processed"] for r in per_part)
         # commit point: everything the new frontier state supersedes is
         # durable — flip the added table (one atomic rename); stamp the
-        # input size + the arithmetic chain for the next round and for
-        # metrics finalization after a crash
-        added_token["manifest"]["meta"]["n_frontier"] = n_frontier
-        added_token["manifest"]["meta"]["n_frontier_next"] = (
-            n_frontier - n_decided_tmp + n_disc_new
-        )
-        # compaction-policy counters (chained, no Spark jobs): every
-        # decided url appended one tombstone this round
+        # input size + the arithmetic chain for the next round, the
+        # compaction-policy counters (every decided url appended one
+        # tombstone this round) and the discovery counts for metrics
+        # finalization after a crash
         n_tombstones = n_tomb_prev + n_decided_tmp
-        added_token["manifest"]["meta"]["n_base"] = n_base
-        added_token["manifest"]["meta"]["n_tombstones"] = n_tombstones
+        added_token["manifest"]["meta"].update(
+            n_frontier=n_frontier,
+            n_frontier_next=n_frontier - n_decided_tmp + n_disc_new,
+            n_base=n_base,
+            n_tombstones=n_tombstones,
+            n_discovered_raw=n_disc_raw,
+            n_discovered_new=n_disc_new,
+        )
         self.store.commit_staged(added_token)
         delta_ranked.unpersist(blocking=False)
-        _trace("maintain (concurrent delta jobs + ordered added commit)")
 
         # 4. per-round summary + metrics table commit
         wall = time.monotonic() - t0
@@ -1009,42 +934,27 @@ class CrawlEngine:
         # path — a crash mid-compaction changes nothing the logical
         # view can observe). Primary trigger: accumulated tombstones
         # vs base size — read degradation tracks |removed|, not
-        # wall-clock rounds. compact_every is a periodic override.
-        do_compact = (
-            cfg.compact_ratio > 0 and tombstone_ratio >= cfg.compact_ratio
-        ) or (cfg.compact_every > 0 and round_no % cfg.compact_every == 0)
-        if do_compact:
+        # wall-clock rounds.
+        if cfg.compact_ratio > 0 and tombstone_ratio >= cfg.compact_ratio:
             self.compact_frontier(round_no)
             summary["compacted"] = True
-            _trace(f"compact (tombstone_ratio={tombstone_ratio:.3f})")
         return summary
 
     def _delta_new(
         self,
         log: DataFrame,
-        round_no: int,
-        seen_prev: DataFrame | None = None,
-        use_bloom: bool = False,
+        delta_ranked: DataFrame,
+        seen_prev: DataFrame,
         prebuilt=None,
-        delta_ranked: DataFrame | None = None,
     ) -> DataFrame:
         """The round's deduped, seen-filtered, not-just-decided
-        discovery delta (lazy expression). ``delta_ranked`` lets the
-        caller pass a pre-built (possibly persisted) raw delta already
-        carrying the per-url dedup rank ``_rn``."""
-        if seen_prev is None:
-            seen_prev = self.store.read("seen", SEEN_SCHEMA).where(
-                F.col("completed_round") < round_no
-            )
-        if delta_ranked is None:
-            wdup = Window.partitionBy("url").orderBy(*_best_order())
-            delta_ranked = self._delta_expr(log, round_no).withColumn(
-                "_rn", F.row_number().over(wdup)
-            )
+        discovery delta (lazy expression) from the raw delta carrying
+        the per-url dedup rank ``_rn``."""
         recorded_urls = log.where(~F.col("will_retry")).select("url")
         delta_best = delta_ranked.where(F.col("_rn") == 1).drop("_rn")
         return anti_join_seen(
-            delta_best, seen_prev, use_bloom=use_bloom, prebuilt=prebuilt
+            delta_best, seen_prev, use_bloom=self.config.use_bloom,
+            prebuilt=prebuilt,
         ).join(recorded_urls.hint("merge"), "url", "left_anti")
 
     def compact_frontier(self, round_no: int) -> None:
@@ -1053,9 +963,15 @@ class CrawlEngine:
         compaction analog). Idempotent at every crash point: merging an
         already-compacted base with stale tombstones/added rows is a
         no-op (anti-join misses, merge_best dedups)."""
-        logical = self.logical_frontier(round_no + 1)
+        self._reset_frontier(self.logical_frontier(round_no + 1), round_no)
+
+    def _reset_frontier(self, base: DataFrame, round_no: int) -> None:
+        """Commit ``base`` as the whole logical frontier as of round_no:
+        overwrite the base table FIRST (it contains everything, so the
+        truncations after it are idempotent), then empty the added and
+        tombstone deltas."""
         self.store.overwrite(
-            "frontier", logical, bucket=self._bucket, meta={"round": round_no}
+            "frontier", base, bucket=self._bucket, meta={"round": round_no}
         )
         empty = self.spark.createDataFrame([], FRONTIER_SCHEMA)
         self.store.overwrite(
@@ -1305,33 +1221,11 @@ class CrawlEngine:
             frontier_keep, self._with_politeness(restore)
         )
         # recovery is itself re-runnable: guard with a control status
-        # (run() refuses while "recovering"), commit the rebuilt base
-        # FIRST (it contains everything, so every later step is
-        # idempotent against it), then truncate the deltas and roll
-        # back the round-scoped tables
+        # (run() refuses while "recovering"), commit the rebuilt
+        # frontier (base first), then roll back the round-scoped tables
         self._set_control(status="recovering")
-        self.store.overwrite(
-            "frontier", next_frontier, bucket=self._bucket,
-            meta={"round": from_round - 1},
-        )
-        empty = self.spark.createDataFrame([], FRONTIER_SCHEMA)
-        self.store.overwrite(
-            "frontier_added", empty, bucket=self._bucket,
-            meta={"round": from_round - 1},
-        )
-        empty_removed = self.spark.createDataFrame([], REMOVED_SCHEMA)
-        self.store.overwrite(
-            "frontier_removed", empty_removed, bucket=self._bucket
-        )
-        tags = {f"round-{r}" for r in range(from_round, cur + 1)}
-        self.store.drop_tagged("results", tags)
-        self.store.drop_tagged("metrics", tags)
-        if self.store.exists("sketch_registers"):
-            self.store.drop_tagged("sketch_registers", tags)
-        clean_seen = self.store.read("seen", SEEN_SCHEMA).where(
-            F.col("completed_round") < from_round
-        )
-        self.store.overwrite("seen", clean_seen, bucket=self._bucket)
+        self._reset_frontier(next_frontier, from_round - 1)
+        self._rollback(from_round, cur)
         return self._set_control(
             status="running", recovery_attempts=c["recovery_attempts"] + 1
         )
@@ -1371,11 +1265,7 @@ class CrawlEngine:
         pages_ext for text/outlinks of fetched rows (the results table
         is a pure decision log; text stays normalized in pages_ext)."""
         res = self.store.read("results")
-        pext = (
-            self.ensure_pages_ext()
-            if self.config.precompute_extraction
-            else self.extracted_pages()
-        ).select("url", "text", "outlinks")
+        pext = self.ensure_pages_ext().select("url", "text", "outlinks")
         joined = res.join(pext, "url", "left")
         is_fetched = F.col("fetch_decision") == "fetched"
         return joined.select(
